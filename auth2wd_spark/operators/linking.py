@@ -22,20 +22,28 @@ equi-join against a deterministic dimension table:
       (external_id.rs:139-158); ids absent from the table pass (the
       reference only knows invalidity by fetching the page).
 
+`link()` is ONE pass over raw: a chain of joins (J7 left-anti, then the
+J1, J6, J5, J2, J3 left joins), each keyed by an expression that is NULL
+unless the row is of the kind that lookup serves — a NULL key never
+matches, so every other row streams through the join untouched. One
+projection then turns each row into its linked shape (kept as-is,
+resolved claim, parked prop_text) and one filter drops the rows today's
+rules drop. Raw is scanned once; nothing is split by kind and unioned
+back.
+
 Dimension tables are broadcast when under the autoBroadcastJoinThreshold;
 at 100 TB the id→QID index outgrows broadcast — pre-bucket both sides on
 (property, id) and let AQE pick the strategy (see plans/pipeline.py).
 
 The reference caches lookup hits AND misses in-process
-(external_id.rs:14-23); distinct() on the candidate keys before the join
-plus the join itself subsumes both caches (SURVEY §4).
+(external_id.rs:14-23); the join subsumes both caches (SURVEY §4).
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from ..properties import KEY2PROP, RESCUE_CLASSES
 
@@ -52,6 +60,12 @@ from ..properties import KEY2PROP, RESCUE_CLASSES
 # 4M rows ≈ 250 MB broadcast worst-case — comfortable on any executor
 # profile that can run this pipeline at all.
 LINK_BROADCAST_MAX_ROWS = int(os.environ.get("AUTH2WD_LINK_BC_MAX_ROWS", "4000000"))
+
+_TERM_KINDS = ("label", "alias", "description")
+# what link() makes of a raw row; a row with no role is dropped
+_KEEP, _ITEM, _RESCUED, _VIAF, _PARKED = "keep", "item", "rescued", "viaf", "parked"
+# columns every role passes through unchanged
+_PASS = ("subj", "src_property", "src_id", "src_url", "ord")
 
 
 def single_hit_index(id_to_qid: DataFrame) -> DataFrame:
@@ -97,17 +111,24 @@ def taxon_index(id_to_qid: DataFrame) -> DataFrame:
     )
 
 
-def rescue_index(id_to_qid: DataFrame, spark) -> DataFrame:
+def rescue_index(id_to_qid: DataFrame) -> DataFrame:
     """(rescue property, name) → QID over the allowed P31 classes (J3).
 
-    Single-hit within each rescue property's class set.
+    Single-hit within each rescue property's class set. The class map is
+    a JVM literal (P31 class → rescue properties), so building the index
+    starts no Python job.
     """
-    class_rows = [
-        (prop, cls) for prop, classes in RESCUE_CLASSES.items() for cls in classes
-    ]
-    classmap = spark.createDataFrame(class_rows, "rescue_property INT, p31 STRING")
+    by_class: dict[str, list[int]] = {}
+    for prop, classes in RESCUE_CLASSES.items():
+        for cls in classes:
+            by_class.setdefault(cls, []).append(prop)
+    class_props = F.create_map(
+        *[v for cls, props in by_class.items() for v in (F.lit(cls), F.array(*map(F.lit, props)))]
+    )
     return (
-        id_to_qid.join(F.broadcast(classmap), "p31")
+        id_to_qid.select(
+            F.explode(class_props[F.col("p31")]).alias("rescue_property"), "label_en", "qid"
+        )
         .groupBy("rescue_property", "label_en")
         .agg(F.countDistinct("qid").alias("n_hits"), F.min("qid").alias("qid"))
         .filter((F.col("n_hits") == 1) & F.col("label_en").isNotNull())
@@ -115,62 +136,14 @@ def rescue_index(id_to_qid: DataFrame, spark) -> DataFrame:
     )
 
 
-def viaf_key_map(spark) -> DataFrame:
-    """property → VIAF source key (KEY2PROP reversed, viaf.rs:168-173)."""
-    rows = [(prop, key) for key, prop in KEY2PROP.items()]
-    return spark.createDataFrame(rows, "cand_property INT, source_key STRING")
+def viaf_key_map() -> Column:
+    """VIAF source key → property (KEY2PROP, viaf.rs:168-173) as a map literal."""
+    return F.create_map(*[F.lit(v) for kv in KEY2PROP.items() for v in kv])
 
 
-def _as_item_claim(df: DataFrame) -> DataFrame:
-    return df.select(
-        "subj",
-        F.lit("claim").alias("kind"),
-        "pred",
-        F.lit("item").alias("obj_type"),
-        F.col("qid").alias("obj_value"),
-        F.lit(None).cast("string").alias("obj_lang"),
-        F.lit(None).cast("int").alias("obj_precision"),
-        F.lit("normal").alias("rank"),
-        F.lit("").alias("qualifiers"),
-        "has_ref",
-        F.lit(False).alias("needs_gnd_check"),
-        F.lit(None).cast("string").alias("cand_kind"),
-        F.lit(None).cast("int").alias("cand_property"),
-        F.lit(None).cast("string").alias("cand_id"),
-        F.lit(None).cast("int").alias("fallback_property"),
-        F.lit(None).cast("string").alias("fallback_text"),
-        F.lit(None).cast("boolean").alias("rescue"),
-        "src_property",
-        "src_id",
-        "src_url",
-        "ord",
-    )
-
-
-def _as_prop_text(df: DataFrame, rescue: bool) -> DataFrame:
-    return df.select(
-        "subj",
-        F.lit("prop_text").alias("kind"),
-        F.lit(None).cast("string").alias("pred"),
-        F.lit(None).cast("string").alias("obj_type"),
-        F.lit(None).cast("string").alias("obj_value"),
-        F.lit(None).cast("string").alias("obj_lang"),
-        F.lit(None).cast("int").alias("obj_precision"),
-        F.lit(None).cast("string").alias("rank"),
-        F.lit(None).cast("string").alias("qualifiers"),
-        F.lit(None).cast("boolean").alias("has_ref"),
-        F.lit(None).cast("boolean").alias("needs_gnd_check"),
-        F.lit(None).cast("string").alias("cand_kind"),
-        F.lit(None).cast("int").alias("cand_property"),
-        F.lit(None).cast("string").alias("cand_id"),
-        "fallback_property",
-        "fallback_text",
-        F.lit(rescue).alias("rescue"),
-        "src_property",
-        "src_id",
-        "src_url",
-        "ord",
-    )
+def _keyed(index: DataFrame, prefix: str) -> DataFrame:
+    """`index` with every column prefixed, so chained joins never collide."""
+    return index.select(*[F.col(c).alias(f"{prefix}_{c}") for c in index.columns])
 
 
 def link(
@@ -202,10 +175,22 @@ def link(
     `label_retry` (default False = reference behavior) enables the J2
     label-disambiguation of multi-hit extids — a deviation from the
     reference, which parks every J1 miss as prop_text (see
-    label_extid_index docstring)."""
-    spark = raw.sparkSession
-    cols = raw.columns
+    label_extid_index docstring).
 
+    Rules, per raw row:
+      claim        kept, unless `needs_gnd_check` is NULL or it is TRUE
+                   and the GND id is known-invalid (J7)
+      extid        J1 (then J2) hit → item claim; a miss with a name is
+                   parked as prop_text (rescue=TRUE) and goes to J3; a
+                   miss without a name is dropped
+      parent_taxon J6 hit → item claim; miss dropped
+      viaf         J5 hit → P214-style extid claim; miss dropped
+      prop_text    J3 hit (rescue=TRUE, rescue-class property) → item
+                   claim with `has_ref` defaulting to TRUE; otherwise
+                   kept — except rescue=TRUE with no fallback_property,
+                   which is dropped
+      terms        kept
+    Any other kind or candidate kind is dropped."""
     if broadcast_max_rows is None:
         broadcast_max_rows = LINK_BROADCAST_MAX_ROWS
 
@@ -218,131 +203,133 @@ def link(
         return lambda df: df
 
     hint = _gated_hint(id_to_qid)
-    idx = hint(single_hit_index(id_to_qid))
-    tax_idx = hint(taxon_index(id_to_qid))
-    resc_idx = hint(rescue_index(id_to_qid, spark))
-    viaf_idx = _gated_hint(viaf_lookup)(
-        viaf_lookup.join(F.broadcast(viaf_key_map(spark)), "source_key")
+    viaf_idx = (
+        viaf_lookup.select(
+            viaf_key_map()[F.col("source_key")].alias("cand_property"), "id", "viaf_id"
+        )
+        .filter(F.col("cand_property").isNotNull())
         .groupBy("cand_property", "id")
         .agg(F.min("viaf_id").alias("viaf_id"))
     )
+    j1 = hint(_keyed(single_hit_index(id_to_qid), "j1"))
+    j6 = hint(_keyed(taxon_index(id_to_qid), "j6"))
+    j5 = _gated_hint(viaf_lookup)(_keyed(viaf_idx, "j5"))
+    j3 = hint(_keyed(rescue_index(id_to_qid), "j3"))
     gnd_invalid = F.broadcast(
-        valid_gnd_ids.filter(~F.col("valid")).select(F.col("gnd_id").alias("obj_value"))
+        valid_gnd_ids.filter(~F.col("valid")).select(F.col("gnd_id").alias("j7_gnd_id"))
     )
 
-    claims = raw.filter(F.col("kind") == "claim")
-    # J7 — drop P227 sameAs claims whose GND id is known-invalid
-    checked = claims.filter(F.col("needs_gnd_check"))
-    unchecked = claims.filter(~F.col("needs_gnd_check"))
-    kept = checked.join(gnd_invalid, "obj_value", "left_anti")
-    claims_out = unchecked.unionByName(kept.select(*cols))
+    kind, cand_kind = F.col("kind"), F.col("cand_kind")
+    fb_prop, fb_text = F.col("fallback_property"), F.col("fallback_text")
+    is_extid = (kind == "candidate") & (cand_kind == "extid")
 
+    def key(cond: Column, column: str) -> Column:
+        return F.when(cond, F.col(column))
+
+    def for_cand(which: str, column: str) -> Column:
+        return key((kind == "candidate") & (cand_kind == which), column)
+
+    # J7 — drop P227 sameAs claims whose GND id is known-invalid
+    gnd_check = (kind == "claim") & F.col("needs_gnd_check")
+    df = raw.join(gnd_invalid, key(gnd_check, "obj_value") == F.col("j7_gnd_id"), "left_anti")
     # J1 — extid candidates
-    cand = raw.filter(F.col("kind") == "candidate")
-    extid_cand = cand.filter(F.col("cand_kind") == "extid")
-    j1 = extid_cand.join(
-        idx,
-        (extid_cand["cand_property"] == idx["property"]) & (extid_cand["cand_id"] == idx["id"]),
+    df = df.join(
+        j1,
+        (for_cand("extid", "cand_property") == F.col("j1_property"))
+        & (for_cand("extid", "cand_id") == F.col("j1_id")),
         "left",
     )
-    resolved = _as_item_claim(j1.filter(F.col("qid").isNotNull()))
-
+    # J6 — parent taxon; J5 — VIAF inference
+    df = df.join(
+        j6,
+        (for_cand("parent_taxon", "cand_property") == F.col("j6_property"))
+        & (for_cand("parent_taxon", "cand_id") == F.col("j6_id")),
+        "left",
+    )
+    df = df.join(
+        j5,
+        (for_cand("viaf", "cand_property") == F.col("j5_cand_property"))
+        & (for_cand("viaf", "cand_id") == F.col("j5_id")),
+        "left",
+    )
+    extid_hit = F.col("j1_qid")
     # J2 (extension, gated) — label-constrained retry for J1 misses that
     # carry a name; with label_retry=False (reference behavior) every J1
     # miss parks directly as prop_text
-    j1_missed = j1.filter(F.col("qid").isNull() & F.col("fallback_text").isNotNull()).drop(
-        "qid", "property", "id"
-    )
     if label_retry:
-        lbl_idx = hint(label_extid_index(id_to_qid))
-        j2 = j1_missed.join(
-            lbl_idx,
-            (j1_missed["cand_property"] == lbl_idx["property"])
-            & (j1_missed["cand_id"] == lbl_idx["id"])
-            & (j1_missed["fallback_text"] == lbl_idx["label_en"]),
+        j2 = hint(_keyed(label_extid_index(id_to_qid), "j2"))
+        j1_miss = is_extid & F.col("j1_qid").isNull()
+        df = df.join(
+            j2,
+            (key(j1_miss, "cand_property") == F.col("j2_property"))
+            & (key(j1_miss, "cand_id") == F.col("j2_id"))
+            & (key(j1_miss, "fallback_text") == F.col("j2_label_en")),
             "left",
         )
-        j2_resolved = _as_item_claim(j2.filter(F.col("qid").isNotNull()))
-        missed = j2.filter(F.col("qid").isNull())
-    else:
-        j2_resolved = None
-        missed = j1_missed
-    missed_pt = _as_prop_text(missed, rescue=True)
-
-    # J6 — parent taxon (no fallback on miss)
-    parent_cand = cand.filter(F.col("cand_kind") == "parent_taxon")
-    j6 = parent_cand.join(
-        tax_idx,
-        (parent_cand["cand_property"] == tax_idx["property"])
-        & (parent_cand["cand_id"] == tax_idx["id"]),
-        "inner",
-    )
-    parent_claims = _as_item_claim(j6)
-
-    # J5 — VIAF inference → P214 external-id claim
-    viaf_cand = cand.filter(F.col("cand_kind") == "viaf")
-    j5 = viaf_cand.join(
-        viaf_idx,
-        (viaf_cand["cand_property"] == viaf_idx["cand_property"])
-        & (viaf_cand["cand_id"] == viaf_idx["id"]),
-        "inner",
-    )
-    viaf_claims = j5.select(
-        "subj",
-        F.lit("claim").alias("kind"),
-        viaf_cand["pred"],
-        F.lit("extid").alias("obj_type"),
-        F.col("viaf_id").alias("obj_value"),
-        F.lit(None).cast("string").alias("obj_lang"),
-        F.lit(None).cast("int").alias("obj_precision"),
-        F.lit("normal").alias("rank"),
-        F.lit("").alias("qualifiers"),
-        viaf_cand["has_ref"],
-        F.lit(False).alias("needs_gnd_check"),
-        F.lit(None).cast("string").alias("cand_kind"),
-        F.lit(None).cast("int").alias("cand_property"),
-        F.lit(None).cast("string").alias("cand_id"),
-        F.lit(None).cast("int").alias("fallback_property"),
-        F.lit(None).cast("string").alias("fallback_text"),
-        F.lit(None).cast("boolean").alias("rescue"),
-        "src_property",
-        "src_id",
-        "src_url",
-        "ord",
-    )
-
-    # J3 — typed rescue over ALL prop_text (original + J1 fallbacks)
-    prop_text = raw.filter(F.col("kind") == "prop_text").select(*cols).unionByName(
-        missed_pt.select(*cols)
-    )
-    is_rescuable = F.coalesce(F.col("rescue"), F.lit(False)) & F.col(
-        "fallback_property"
-    ).isin(list(RESCUE_CLASSES.keys()))
-    rescuable = prop_text.filter(is_rescuable)
-    not_rescuable = prop_text.filter(~is_rescuable)
-    j3 = rescuable.join(
-        resc_idx,
-        (rescuable["fallback_property"] == resc_idx["rescue_property"])
-        & (rescuable["fallback_text"] == resc_idx["label_en"]),
+        extid_hit = F.coalesce(extid_hit, F.col("j2_qid"))
+    # J3 — typed rescue over ALL prop_text: the raw rows flagged rescue and
+    # the extid misses about to be parked (which always carry rescue=TRUE)
+    rescue_pt = (kind == "prop_text") & F.coalesce(F.col("rescue"), F.lit(False))
+    rescue_cond = rescue_pt | (is_extid & extid_hit.isNull())
+    df = df.join(
+        j3,
+        (key(rescue_cond, "fallback_property") == F.col("j3_rescue_property"))
+        & (key(rescue_cond, "fallback_text") == F.col("j3_label_en")),
         "left",
     )
-    rescued = j3.filter(F.col("qid").isNotNull()).withColumn(
-        "pred", F.concat(F.lit("P"), F.col("fallback_property").cast("string"))
-    ).withColumn("has_ref", F.coalesce(F.col("has_ref"), F.lit(True)))
-    rescued_claims = _as_item_claim(rescued)
-    still_pt = j3.filter(F.col("qid").isNull()).select(*cols)
 
-    terms = raw.filter(F.col("kind").isin("label", "alias", "description"))
-
-    out = claims_out.select(*cols).unionByName(resolved.select(*cols))
-    if j2_resolved is not None:
-        out = out.unionByName(j2_resolved.select(*cols))
-    return (
-        out
-        .unionByName(parent_claims.select(*cols))
-        .unionByName(viaf_claims.select(*cols))
-        .unionByName(rescued_claims.select(*cols))
-        .unionByName(still_pt)
-        .unionByName(not_rescuable)
-        .unionByName(terms.select(*cols))
+    rescued = F.col("j3_qid").isNotNull()
+    role = (
+        F.when(kind == "claim", F.when(F.col("needs_gnd_check").isNotNull(), _KEEP))
+        .when(kind.isin(*_TERM_KINDS), _KEEP)
+        .when(
+            kind == "prop_text",
+            # rescue=TRUE without a fallback_property is dropped: the SQL
+            # test `coalesce(rescue, FALSE) AND fallback_property IN (…)`
+            # is NULL for it, so it is neither rescuable nor not
+            F.when(rescued, _RESCUED).when(~rescue_pt | fb_prop.isNotNull(), _KEEP),
+        )
+        .when(
+            is_extid,
+            F.when(extid_hit.isNotNull(), _ITEM)
+            .when(rescued, _RESCUED)
+            .when(fb_text.isNotNull() & fb_prop.isNotNull(), _PARKED),
+        )
+        .when((cand_kind == "parent_taxon") & F.col("j6_qid").isNotNull(), _ITEM)
+        .when((cand_kind == "viaf") & F.col("j5_viaf_id").isNotNull(), _VIAF)
     )
+    r = F.col("_role")
+    claim = {
+        "kind": F.lit("claim"),
+        "pred": F.when(r == _RESCUED, F.concat(F.lit("P"), fb_prop.cast("string"))).otherwise(
+            F.col("pred")
+        ),
+        "obj_type": F.when(r == _VIAF, "extid").otherwise("item"),
+        "obj_value": F.when(r == _VIAF, F.col("j5_viaf_id")).otherwise(
+            F.coalesce(extid_hit, F.col("j6_qid"), F.col("j3_qid"))
+        ),
+        "rank": F.lit("normal"),
+        "qualifiers": F.lit(""),
+        # a parked extid carries no has_ref, so its rescue defaults to TRUE
+        "has_ref": F.when(
+            r == _RESCUED, F.coalesce(F.when(kind == "prop_text", F.col("has_ref")), F.lit(True))
+        ).otherwise(F.col("has_ref")),
+        "needs_gnd_check": F.lit(False),
+    }
+    parked = {
+        "kind": F.lit("prop_text"),
+        "fallback_property": fb_prop,
+        "fallback_text": fb_text,
+        "rescue": F.lit(True),
+    }
+    out = [
+        F.col(f.name)
+        if f.name in _PASS
+        else F.when(r == _KEEP, F.col(f.name))
+        .when(r == _PARKED, parked.get(f.name))
+        .otherwise(claim.get(f.name))
+        .cast(f.dataType)
+        .alias(f.name)
+        for f in raw.schema
+    ]
+    return df.withColumn("_role", role).filter(r.isNotNull()).select(*out)

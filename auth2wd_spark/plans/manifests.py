@@ -27,9 +27,9 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 MANIFEST = "_MANIFEST.json"
 
 
-def _file_inventory(spark: SparkSession, path: str) -> list[dict]:
-    """(file, rows, content_hash) per parquet file in `path`."""
-    df = spark.read.parquet(path)
+def _file_inventory(df: DataFrame) -> list[dict]:
+    """(file, rows, content_hash) per parquet file behind `df`, a plain
+    parquet read of one stage directory."""
     cols = df.columns
     per_file = (
         df.withColumn("_file", F.input_file_name())
@@ -85,11 +85,14 @@ def materialize_stage(
     """Write-or-resume one pipeline stage; returns the materialized frame."""
     spark = df.sparkSession
     if stage_is_complete(spark, stage_dir):
-        return spark.read.parquet(stage_dir)
+        return spark.read.schema(df.schema).parquet(stage_dir)
     t0 = time.perf_counter()
     df.write.mode("overwrite").parquet(stage_dir)
     elapsed = time.perf_counter() - t0
-    files = _file_inventory(spark, stage_dir)
+    # one read-back with the known schema: schema inference would start a
+    # footer-reading job per read
+    written = spark.read.schema(df.schema).parquet(stage_dir)
+    files = _file_inventory(written)
     n_rows = sum(f["rows"] for f in files)
     manifest = {
         "stage": stage_name,
@@ -103,7 +106,7 @@ def materialize_stage(
     }
     with open(_manifest_path(stage_dir), "w", encoding="utf-8") as fh:
         json.dump(manifest, fh, indent=1, sort_keys=True)
-    return spark.read.parquet(stage_dir)
+    return written
 
 
 def read_manifest(stage_dir: str) -> dict:
@@ -165,7 +168,7 @@ def run_resumable(
 
     # one materialization feeds all six table writes below — lazy
     # with_comp would re-execute the triples × labels join per write
-    # (3.1× slower at bench cardinalities, BENCH/merge_withcomp_ab.py)
+    # (3.1× slower at bench cardinalities, BENCH/merge_withcomp_ab_result.txt)
     with_comp = assign_components(triples, labels).localCheckpoint()
     tables = merge_component(with_comp, ref_cap=config.ref_cap)
     out = {}

@@ -80,11 +80,12 @@ def run_pipeline(
             }
         return out
 
-    # link() fans raw out into ~6 branches (claims / candidates by kind /
-    # prop_text / terms) and every downstream action replans the whole
-    # lineage — localCheckpoint both materializes (no recompute per
-    # branch) and TRUNCATES the logical plan, which otherwise grows deep
-    # enough that Catalyst planning time dominates small-batch runs
+    # extract_pages checkpoints raw, and link()'s single pass over it
+    # (a chain of broadcast joins) is checkpointed below: every downstream
+    # action would otherwise replan and re-run the whole lineage —
+    # localCheckpoint both materializes and TRUNCATES the logical plan,
+    # which otherwise grows deep enough that Catalyst planning time
+    # dominates small-batch runs
     raw = _phase("extract_sec", lambda: extract_pages(pages))
 
     # link() construction stays INSIDE the timed phase: the round-5 gate
@@ -123,7 +124,7 @@ def run_pipeline(
         # materialize ONCE when it fits: merge_component fans with_comp
         # out to six tables and every consumer re-executes the triples ×
         # labels join when wc stays lazy. Measured round 5
-        # (BENCH/merge_withcomp_ab.py, alternating reps): at 3.46M
+        # (BENCH/merge_withcomp_ab_result.txt, alternating reps): at 3.46M
         # triples (~1.3 GB materialized) the checkpoint wins at every
         # core count and consumer count (claims+labels 20.4 s → 13.3 s at
         # 32c, 25.8 → 15.5 at 8c); at 27.7M triples (~10 GB, past the

@@ -73,6 +73,17 @@ def release_all_cached(spark: SparkSession) -> None:
         pass
 
 
+def default_driver_memory() -> str:
+    """Driver heap as 60 % of physical RAM: in local mode the driver JVM
+    runs every task, and a fixed heap sized for a large host gets the
+    process OOM-killed on a small one (48g did, on a 15 GB host)."""
+    try:
+        ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, OSError, ValueError):  # no sysconf on this platform
+        return "4g"
+    return f"{int(ram * 0.6) // 2**20}m"
+
+
 def build_session(
     app_name: str = "auth2wd-spark",
     cpus: int | str | None = None,
@@ -98,7 +109,7 @@ def build_session(
         # per-phase shuffle read/write bytes reach BENCH/bench_full.json
         .config("spark.ui.enabled", os.environ.get("SPARK_GRAFT_UI", "0") == "1" and "true" or "false")
         .config("spark.ui.retainedStages", "10000")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory())
     )
     spark = builder.getOrCreate()
     ship_package(spark)

@@ -205,3 +205,46 @@ def test_link_indexes_broadcast_under_gate(spark):
     assert strategies.get("broadcast_hash", 0) >= 4, strategies
     assert "sort_merge" not in strategies, strategies
     assert "shuffled_hash" not in strategies, strategies
+
+
+@pytest.mark.parametrize("label_retry", [False, True])
+def test_link_is_one_pass_over_raw(spark, tmp_path, label_retry):
+    """link() reads raw once: its executed plan scans the raw table a
+    single time, unions nothing back, runs no Python (the VIAF key map and
+    rescue class map are JVM literals) and shuffles raw through no join."""
+    from auth2wd_spark import schemas
+    from auth2wd_spark.corpus.generate import build_corpus
+    from auth2wd_spark.operators.extract import extract_pages
+    from auth2wd_spark.operators.linking import link
+
+    corpus = build_corpus(n_persons=20, noise_pages=5)
+
+    def parquet(df, name):
+        path = str(tmp_path / name)
+        df.write.parquet(path)
+        return spark.read.parquet(path)
+
+    pages = spark.createDataFrame(corpus["pages"], schema=schemas.PAGES)
+    raw = parquet(extract_pages(pages, materialize=False), "raw")
+    dims = [
+        parquet(spark.createDataFrame(corpus[name], schema=schema), name)
+        for name, schema in (
+            ("id_to_qid", schemas.ID_TO_QID),
+            ("viaf_lookup", schemas.VIAF_LOOKUP),
+            ("valid_gnd_ids", schemas.VALID_GND_IDS),
+        )
+    ]
+    linked = link(raw, *dims, label_retry=label_retry)
+    linked.collect()
+    # the executed AQE plan; its initial plan would count every node twice
+    plan = linked._jdf.queryExecution().executedPlan().toString().split("== Initial Plan ==")[0]
+    assert "isFinalPlan=true" in plan, plan
+    # the scan node prints a truncated path; raw is the table with cand_kind
+    raw_scans = [line for line in plan.splitlines() if "FileScan parquet" in line and "cand_kind" in line]
+    assert len(raw_scans) == 1, plan
+    assert "Union" not in plan, plan
+    python_nodes = ("BatchEvalPython", "ArrowEvalPython", "MapInArrow", "MapInPandas", "PythonUDF", "ExistingRDD")
+    assert not [n for n in python_nodes if n in plan], plan
+    assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan, plan
+    # J7, J1, J6, J5, J3 (+ J2 under label_retry)
+    assert plan.count("BroadcastHashJoin") == 6 if label_retry else 5, plan

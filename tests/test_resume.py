@@ -9,7 +9,12 @@ from pyspark.sql import functions as F
 
 from auth2wd_spark import schemas
 from auth2wd_spark.corpus.generate import build_corpus
-from auth2wd_spark.plans.manifests import read_manifest, run_resumable, stage_is_complete
+from auth2wd_spark.plans.manifests import (
+    materialize_stage,
+    read_manifest,
+    run_resumable,
+    stage_is_complete,
+)
 
 
 @pytest.fixture(scope="module")
@@ -68,3 +73,34 @@ def test_incomplete_stage_recomputed(spark, corpus_frames, tmp_path_factory):
     t = run_resumable(pages, idq, vl, vg, out)
     assert stage_is_complete(spark, os.path.join(out, "triples"))
     assert t["claims"].count() > 0
+
+
+def test_materialize_stage_reads_back_with_known_schema(spark, tmp_path):
+    """Writing a stage starts the write job and the manifest's inventory
+    jobs, but no parquet schema-inference job: the stage is read back
+    once, with the schema of the frame that was written."""
+    sc = spark.sparkContext
+    df = spark.range(0, 1000, numPartitions=2).withColumn("v", F.col("id") % 7)
+    group = "materialize-stage-read-back"
+    sc.setJobGroup(group, group)
+    try:
+        out = materialize_stage(df, str(tmp_path / "stage"), "stage")
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(prop, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+
+    tracker = sc.statusTracker()
+    jobs = sorted(tracker.getJobIdsForGroup(group))
+    parquet_jobs = [
+        j
+        for j in jobs
+        if any(
+            (tracker.getStageInfo(s) and tracker.getStageInfo(s).name or "").startswith("parquet at")
+            for s in tracker.getJobInfo(j).stageIds
+        )
+    ]
+    assert parquet_jobs == jobs[:1], (jobs, parquet_jobs)  # the write only
+    assert read_manifest(str(tmp_path / "stage"))["metrics"]["rows"] == 1000
+    assert out.schema == spark.read.parquet(str(tmp_path / "stage")).schema
+    assert out.count() == 1000
