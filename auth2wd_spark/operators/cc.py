@@ -1,16 +1,21 @@
 """Connected components over the record ↔ external-id graph.
 
 Replaces the reference's sequential fixpoint worklist
-(/root/reference/src/combinator.rs:132-180): records that share any
-supported external id (or an inferred VIAF id, combinator.rs:137-147)
-belong to one cluster. The crawl loop's BFS rounds become iterations of
-min-label propagation with pointer jumping (path halving), which converges
-in O(log d) rounds; each round is one shuffle on the label table and is
-localCheckpoint()ed to cut lineage (SURVEY §3.2).
+(src/combinator.rs:132-180): records that share any supported external
+id (or an inferred VIAF id, combinator.rs:137-147) belong to one cluster.
+Two physical paths behind one contract, both labelling each node with the
+lexicographic minimum member key of its component:
+
+  - the driver path: edge sets under LOCAL_CC_THRESHOLD edges and
+    LOCAL_CC_BYTE_CAP key bytes are fetched as one Arrow table and solved
+    by a vectorized union-find on the driver (`_driver_union_find`);
+  - the star path: larger graphs run alternating large-star/small-star
+    rounds on 64-bit hashed node ids, each round localCheckpoint()ed to
+    cut lineage (SURVEY §3.2), then relabel to the min member string.
 
 Hot entities (a celebrity VIAF id in millions of pages) make high-degree
-nodes; label propagation handles them in the groupBy(min) — a single
-reduce key — and AQE skew-join splitting covers the join side.
+nodes; large-star splits them across reducers, and AQE skew-join
+splitting covers the join side.
 """
 
 from __future__ import annotations
@@ -63,23 +68,9 @@ LOCAL_CC_THRESHOLD = int(os.environ.get("AUTH2WD_CC_LOCAL_THRESHOLD", "32000000"
 # a 4-12× slower plan at sandbox scale. Past the cap, edges genuinely
 # outgrow one machine and the distributed star rewrites are the only path.
 LOCAL_CC_BYTE_CAP = int(os.environ.get("AUTH2WD_CC_LOCAL_BYTE_CAP", str(1024 * 1024 * 1024)))
-# OPT-IN (>0 engages): key-byte volume beyond which the driver path ships
-# xxhash64-encoded int64 edge endpoints instead of the key strings.
-# Hypothesis tested round 5 (BENCH/cc_hashed_ab_result.json, 5M edges /
-# 247 MB keys): the int64 variant measured 26.6-57.5 s vs 18.2-19.7 s for
-# the exact-string path — the Arrow string transfer is NOT the floor
-# (toArrow 1.4 s, dictionary_encode 1.7 s; the numpy union-find sweep
-# itself, 4.0 s, is the largest driver-side term), and the hashed
-# variant's extra distributed relabel jobs (distinct over 2·E strings +
-# two joins) cost more than they save. Default 0 = disabled; kept as a
-# knob because on a REAL cluster (network-attached driver, slower
-# transfer) the trade could invert.
-LOCAL_CC_HASHED_MIN_BYTES = int(os.environ.get("AUTH2WD_CC_HASHED_MIN_BYTES", "0"))
 
 
-def connected_components(
-    edges: DataFrame, max_iter: int = 25, checkpoint: bool = True
-) -> DataFrame:
+def connected_components(edges: DataFrame, max_iter: int = 25) -> DataFrame:
     """edges (src, dst) → (node, component) with component = min node id.
 
     Two physical strategies behind one contract (both deterministic —
@@ -98,9 +89,8 @@ def connected_components(
         are exactly what large-star splits across reducers.
     """
     spark = edges.sparkSession
-    proper = edges.select("src", "dst").filter(F.col("src") != F.col("dst"))
-    if checkpoint:
-        proper = proper.localCheckpoint()  # one materialization feeds both paths
+    # one materialization feeds both paths
+    proper = edges.select("src", "dst").filter(F.col("src") != F.col("dst")).localCheckpoint()
     stats = proper.agg(
         F.count(F.lit(1)).alias("n"),
         # octet_length, not length: the cap reasons about driver heap BYTES,
@@ -116,15 +106,11 @@ def connected_components(
     # applies minimum.at on both endpoint arrays, so symmetrization (and
     # the big distinct shuffle it costs) is only paid on the star path.
     if n_edges <= LOCAL_CC_THRESHOLD and (stats["key_bytes"] or 0) <= LOCAL_CC_BYTE_CAP:
-        if 0 < LOCAL_CC_HASHED_MIN_BYTES < (stats["key_bytes"] or 0):
-            return _driver_union_find_hashed(spark, proper)
         return _driver_union_find(spark, proper)
 
     sym = proper.union(
         proper.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).distinct()
-    if checkpoint:
-        sym = sym.localCheckpoint()
+    ).distinct().localCheckpoint()
 
     # run the iterative rewrites on 64-bit hashed node ids (≈half the
     # shuffle bytes of the string keys and cheaper comparisons), then
@@ -132,16 +118,17 @@ def connected_components(
     # Collision odds at 64 bits are ~n²/2⁶⁵ (≈1e-7 at 10M nodes); a
     # trillion-node deployment swaps in a 128-bit key.
     nodes = (
-        sym.select(F.col("src").alias("node")).distinct().withColumn("h", F.xxhash64("node"))
+        sym.select(F.col("src").alias("node"))
+        .distinct()
+        .withColumn("h", F.xxhash64("node"))
+        .localCheckpoint()
     )
-    if checkpoint:
-        nodes = nodes.localCheckpoint()
     hsym = (
         sym.join(nodes.select(F.col("node").alias("src"), F.col("h").alias("hsrc")), "src")
         .join(nodes.select(F.col("node").alias("dst"), F.col("h").alias("hdst")), "dst")
         .select(F.col("hsrc").alias("src"), F.col("hdst").alias("dst"))
     )
-    hlabels = _large_small_star(hsym, max_iter=max_iter, checkpoint=checkpoint)
+    hlabels = _large_small_star(hsym, max_iter=max_iter)
     labeled = hlabels.join(nodes.select("node", F.col("h").alias("node_h")).withColumnRenamed("node", "node_str"),
                            hlabels["node"] == F.col("node_h")).select(
         F.col("node_str").alias("node"), F.col("component").alias("hcomp")
@@ -154,7 +141,7 @@ def connected_components(
 
 def _min_label_sweep(e_src, e_dst, n_nodes: int):
     """Vectorized min-label propagation with pointer jumping over coded
-    edge arrays — the shared core of all three driver paths. The label
+    edge arrays — the union-find core of the driver path. The label
     vector is monotonically non-increasing, so the loop provably
     terminates; returns the final parent array (root code per node)."""
     import numpy as np
@@ -184,25 +171,19 @@ def _driver_union_find(spark, edges: DataFrame) -> DataFrame:
     lexicographic-min member per component comes from a `sort_indices`
     RANK of the dictionary (UTF-8 byte order == code-point order) reduced
     with one more `minimum.at` — so the published component id matches the
-    distributed path's `min(node)` exactly.
+    star path's `min(node)` exactly.
 
     Measured at 5.3M edges / 3.16M nodes (the 800k-person scaling corpus):
     8.6 s total, vs 72 s for the round-2 pandas version — toPandas object
     conversion (29 s) and pandas object-dtype groupby-min (30 s) were the
     "serial CC floor" every scaling session measured; the union-find
-    itself is ~1.5 s. The label vector is monotonically non-increasing,
-    so the loop provably terminates.
+    itself is ~1.5 s.
     """
     import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
 
-    try:
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        tbl = edges.select("src", "dst").toArrow()
-    except (ImportError, AttributeError):  # pre-Arrow-API Spark: pandas path
-        return _driver_union_find_pandas(spark, edges)
-
+    tbl = edges.select("src", "dst").toArrow()
     # large_string: 64-bit offsets, so a raised AUTH2WD_CC_LOCAL_BYTE_CAP
     # (>2 GiB of keys) cannot overflow combine_chunks' int32 offset space
     combined = (
@@ -230,86 +211,7 @@ def _driver_union_find(spark, edges: DataFrame) -> DataFrame:
     return spark.createDataFrame(out)
 
 
-def _driver_union_find_hashed(spark, edges: DataFrame) -> DataFrame:
-    """Driver union-find over xxhash64-ENCODED endpoints (round 5).
-
-    Executors hash both key strings, so the driver fetches two int64
-    columns (16 bytes/edge) instead of the raw keys — at 7M edges that is
-    ~110 MB vs ~450 MB of Arrow string buffers, and the per-leg serial
-    term that capped every scaling session shrinks proportionally. The
-    min-label sweep runs in hash space (np.unique interning — an int64
-    sort, no string objects); the published component id must still be
-    the lexicographic-min member STRING, so the (hash → root-hash) result
-    ships back as an Arrow table and the relabel (distinct nodes →
-    groupBy(root) min(node) → join) runs DISTRIBUTED — work that scales
-    with executors instead of adding to the driver floor.
-
-    Collision odds are the star path's documented ~n²/2⁶⁵ trade
-    (cc.py:107); the exact-string path below remains the default under
-    LOCAL_CC_HASHED_MIN_BYTES.
-    """
-    import numpy as np
-
-    try:
-        import pyarrow as pa
-
-        tbl = edges.select(
-            F.xxhash64("src").alias("hsrc"), F.xxhash64("dst").alias("hdst")
-        ).toArrow()
-    except (ImportError, AttributeError):
-        return _driver_union_find_pandas(spark, edges)
-
-    hs = tbl.column("hsrc").combine_chunks().to_numpy(zero_copy_only=False)
-    hd = tbl.column("hdst").combine_chunks().to_numpy(zero_copy_only=False)
-    both = np.concatenate([hs, hd])
-    uniq, codes = np.unique(both, return_inverse=True)
-    n_edges = len(hs)
-    e_src = codes[:n_edges].astype(np.int64)
-    e_dst = codes[n_edges:].astype(np.int64)
-    parent = _min_label_sweep(e_src, e_dst, len(uniq))
-    # no localCheckpoint: the table is already driver-local (LocalTableScan)
-    # and checkpointed blocks here would leak per invocation — a long-lived
-    # session calling CC repeatedly would grow storage memory without bound
-    hmap = spark.createDataFrame(
-        pa.table({"h": pa.array(uniq), "root_h": pa.array(uniq[parent])})
-    )
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .union(edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .withColumn("h", F.xxhash64("node"))
-    )
-    labeled = nodes.join(hmap, "h").select("node", "root_h")
-    canonical = labeled.groupBy("root_h").agg(F.min("node").alias("component"))
-    return labeled.join(canonical, "root_h").select("node", "component")
-
-
-def _driver_union_find_pandas(spark, edges: DataFrame) -> DataFrame:
-    """Fallback for Spark builds without toArrow/Arrow-table createDataFrame."""
-    import numpy as np
-    import pandas as pd
-
-    old_arrow = spark.conf.get("spark.sql.execution.arrow.pyspark.enabled", "false")
-    spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
-    try:
-        pdf = edges.select("src", "dst").toPandas()
-
-        both = np.concatenate([pdf["src"].to_numpy(), pdf["dst"].to_numpy()])
-        codes, nodes = pd.factorize(both)
-        n_edges = len(pdf)
-        e_src = codes[:n_edges]
-        e_dst = codes[n_edges:]
-        parent = _min_label_sweep(e_src, e_dst, len(nodes))
-        out = pd.DataFrame({"node": nodes, "root": parent})
-        out["component"] = out["root"].map(out.groupby("root")["node"].min())
-        return spark.createDataFrame(
-            out[["node", "component"]], "node STRING, component STRING"
-        )
-    finally:
-        spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", old_arrow)
-
-
-def _large_small_star(sym: DataFrame, max_iter: int, checkpoint: bool) -> DataFrame:
+def _large_small_star(sym: DataFrame, max_iter: int) -> DataFrame:
     """Alternating large-star/small-star over the edge set."""
     spark = sym.sparkSession
     # Catalyst's union constraint rewriting can fail with
@@ -318,12 +220,12 @@ def _large_small_star(sym: DataFrame, max_iter: int, checkpoint: bool) -> DataFr
     old_cp = spark.conf.get("spark.sql.constraintPropagation.enabled", "true")
     spark.conf.set("spark.sql.constraintPropagation.enabled", "false")
     try:
-        return _large_small_star_loop(sym, max_iter, checkpoint)
+        return _large_small_star_loop(sym, max_iter)
     finally:
         spark.conf.set("spark.sql.constraintPropagation.enabled", old_cp)
 
 
-def _large_small_star_loop(sym: DataFrame, max_iter: int, checkpoint: bool) -> DataFrame:
+def _large_small_star_loop(sym: DataFrame, max_iter: int) -> DataFrame:
     edges = sym  # symmetric to start; rounds keep a directed (big→small) set
     prev_checksum = None
     converged = False
@@ -355,9 +257,12 @@ def _large_small_star_loop(sym: DataFrame, max_iter: int, checkpoint: bool) -> D
             .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
         )
         small_self = smins.select(F.col("node").alias("src"), F.col("m").alias("dst"))
-        edges = small_nbrs.union(small_self).filter(F.col("src") != F.col("dst")).distinct()
-        if checkpoint:
-            edges = edges.localCheckpoint()
+        edges = (
+            small_nbrs.union(small_self)
+            .filter(F.col("src") != F.col("dst"))
+            .distinct()
+            .localCheckpoint()
+        )
         checksum = edges.agg(
             F.count(F.lit(1)).alias("n"),
             # decimal sum: long would overflow under ANSI arithmetic
@@ -386,27 +291,24 @@ def _large_small_star_loop(sym: DataFrame, max_iter: int, checkpoint: bool) -> D
     ).distinct()
 
 
-def assign_components(
-    triples: DataFrame, labels: DataFrame, broadcast_max_rows: int | None = None
-) -> DataFrame:
+def assign_components(triples: DataFrame, labels: DataFrame) -> DataFrame:
     """Map each subj to its component id; singletons keep subj as component.
 
     Round 6: the label table is two narrow string columns with one row per
     clustered node — orders of magnitude smaller than the 21-column triples
     table, whose SMJ shuffle was the bulk of the assign phase (140 MB of
     shuffle at the sf0.1 bench vs a ~60 MB broadcast). Same count-gated
-    explicit broadcast as linking.link(): at or under the gate the side is
-    provably broadcast-sized, above it the join falls back to AQE choice
-    (the 100 TB path, where labels outgrow executor memory). The count is
-    cheap — the driver-CC path returns a local Arrow table, and the star
-    path's labels derive from checkpointed edges.
+    explicit broadcast as linking.link() (LINK_BROADCAST_MAX_ROWS): at or
+    under the gate the side is provably broadcast-sized, above it the join
+    falls back to AQE choice (the 100 TB path, where labels outgrow
+    executor memory). The count is cheap — the driver-CC path returns a
+    local Arrow table, and the star path's labels derive from
+    checkpointed edges.
     """
-    if broadcast_max_rows is None:
-        from .linking import LINK_BROADCAST_MAX_ROWS
+    from .linking import LINK_BROADCAST_MAX_ROWS
 
-        broadcast_max_rows = LINK_BROADCAST_MAX_ROWS
     lab = labels.select(F.col("node").alias("subj"), "component")
-    if broadcast_max_rows > 0 and labels.count() <= broadcast_max_rows:
+    if LINK_BROADCAST_MAX_ROWS > 0 and labels.count() <= LINK_BROADCAST_MAX_ROWS:
         lab = F.broadcast(lab)
     return triples.join(lab, "subj", "left").withColumn(
         "component", F.coalesce("component", "subj")

@@ -14,6 +14,7 @@ small in-memory graph per record, never a cluster-wide structure
 from __future__ import annotations
 
 import json
+from typing import Callable
 
 from pyspark.sql import DataFrame, functions as F
 
@@ -45,7 +46,7 @@ def route(pages: DataFrame) -> DataFrame:
     return routed.withColumn("record_id", id_expr)
 
 
-def latest_snapshot(routed: DataFrame, probe_duplicates: bool = True) -> DataFrame:
+def latest_snapshot(routed: DataFrame) -> DataFrame:
     """One row per (source, record_id): the latest crawl snapshot wins.
 
     The fold itself is a max_by hash aggregation (partial map-side
@@ -55,16 +56,15 @@ def latest_snapshot(routed: DataFrame, probe_duplicates: bool = True) -> DataFra
     already unique — common for curated snapshots — the payload shuffle is
     skipped entirely. Re-crawled corpora pay it once, as they must.
     """
-    if probe_duplicates:
-        dup = (
-            routed.groupBy("source", "record_id")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .filter(F.col("n") > 1)
-            .limit(1)
-            .count()
-        )
-        if dup == 0:
-            return routed.select("source", "record_id", "url", "text", "lang", "warc_ts")
+    dup = (
+        routed.groupBy("source", "record_id")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .filter(F.col("n") > 1)
+        .limit(1)
+        .count()
+    )
+    if dup == 0:
+        return routed.select("source", "record_id", "url", "text", "lang", "warc_ts")
     return (
         routed.groupBy("source", "record_id")
         .agg(
@@ -220,23 +220,28 @@ def extract(records: DataFrame) -> DataFrame:
     return records.select(*cols).mapInArrow(parse_batches, schema=RAW)
 
 
-def extract_pages(pages: DataFrame, materialize: bool = True) -> DataFrame:
+def extract_pages(
+    pages: DataFrame,
+    materialize: Callable[[DataFrame], DataFrame] = lambda df: df.localCheckpoint(),
+) -> DataFrame:
     """Full pages → RAW chain: route → latest snapshot → pair → parse.
 
     The routed frame is persisted across its three consumers (duplicate
     probe, secondary-body broadcast build, parse input) — the 19-regex
     route scan is the most expensive JVM expression in the pipeline and
     must run once, not once per consumer.
+
+    `materialize` runs raw once and returns a frame that no longer reads
+    the route cache (default: an eager localCheckpoint, which also
+    truncates lineage; run_resumable passes its parquet stage write). The
+    route cache is released right after it, on every path: repeated
+    pipeline runs must not accumulate cached route copies (storage-memory
+    leak → GC drag).
     """
     from pyspark import StorageLevel
 
     routed = route(pages).persist(StorageLevel.MEMORY_AND_DISK)
-    raw = extract(attach_secondary_bodies(latest_snapshot(routed)))
-    if not materialize:
-        return raw
-    # eager localCheckpoint: materializes once, truncates lineage, and
-    # lets us RELEASE the route cache here — repeated pipeline runs must
-    # not accumulate cached route copies (storage-memory leak → GC drag)
-    raw = raw.localCheckpoint()
-    routed.unpersist()
-    return raw
+    try:
+        return materialize(extract(attach_secondary_bodies(latest_snapshot(routed))))
+    finally:
+        routed.unpersist()

@@ -129,7 +129,7 @@ def run_resumable(
     from ..operators.extract import extract_pages
     from ..operators.linking import link
     from ..operators.merge import merge_component
-    from .pipeline import PipelineConfig
+    from .pipeline import PipelineConfig, salt_components
 
     config = config or PipelineConfig()
     spark = pages.sparkSession
@@ -142,7 +142,7 @@ def run_resumable(
         raw = spark.read.parquet(raw_dir)
     else:
         # the parquet stage write is the materialization here
-        raw = materialize_stage(extract_pages(pages, materialize=False), raw_dir, "extract")
+        raw = extract_pages(pages, lambda df: materialize_stage(df, raw_dir, "extract"))
 
     triples_dir = os.path.join(out_dir, "triples")
     if stage_is_complete(spark, triples_dir):
@@ -160,7 +160,7 @@ def run_resumable(
         labels = spark.read.parquet(comp_dir)
     else:
         labels = materialize_stage(
-            connected_components(build_edges(triples), max_iter=config.cc_max_iter),
+            connected_components(build_edges(triples)),
             comp_dir,
             "connected_components",
             inputs=["triples"],
@@ -169,7 +169,9 @@ def run_resumable(
     # one materialization feeds all six table writes below — lazy
     # with_comp would re-execute the triples × labels join per write
     # (3.1× slower at bench cardinalities, BENCH/merge_withcomp_ab_result.txt)
-    with_comp = assign_components(triples, labels).localCheckpoint()
+    with_comp = salt_components(
+        assign_components(triples, labels), config.salt_partitions
+    ).localCheckpoint()
     tables = merge_component(with_comp, ref_cap=config.ref_cap)
     out = {}
     for name in ("claims", "labels", "aliases", "descriptions", "prop_text", "members"):

@@ -12,8 +12,8 @@ Scale posture (north_rule):
     aggregation absorbs hot components map-side; `salt_partitions`
     optionally pre-repartitions on a salted key to spread a
     pathological hot component across reducers before the final agg;
-  - ``as_of`` replaces the reference's Utc::now() (external_importer.rs:364)
-    for deterministic P813 reference dates.
+  - the sinks' ``as_of`` replaces the reference's Utc::now()
+    (external_importer.rs:364) for deterministic P813 reference dates.
 """
 
 from __future__ import annotations
@@ -30,14 +30,11 @@ from ..operators.merge import merge_component
 
 @dataclass
 class PipelineConfig:
-    as_of: str = "2026-01-01"  # P813 retrieved date (fixed for determinism)
-    cc_max_iter: int = 25
     salt_partitions: int = 0  # >0: pre-shuffle hot components across N salts
     # >0: bound the per-claim reference/src_url arrays via the two-stage
     # salted slice agg — the single-claim-KEY skew defense a giant
     # component needs (see merge.merge_claims); None keeps full unions
     ref_cap: int | None = None
-    collect_metrics: bool = True  # per-phase wall times in tables["metrics"]
     # opt-in J2 label+extid retry (reference parity is OFF — see
     # ARCHITECTURE.md §3 deviation 7); plumbed through to link()
     label_retry: bool = False
@@ -108,19 +105,10 @@ def run_pipeline(
         metrics["link_join_strategies"] = strategies
 
     edges = build_edges(triples)
-    labels = _phase(
-        "cc_sec", lambda: connected_components(edges, max_iter=config.cc_max_iter)
-    )
+    labels = _phase("cc_sec", lambda: connected_components(edges))
 
     def _assign_and_checkpoint():
-        wc = assign_components(triples, labels)
-        if config.salt_partitions > 0:
-            # spread giant components over reducers before the merge
-            # groupBy; the final agg still combines per (component,
-            # claim-key) because the groupBy keys are unchanged — salting
-            # only drives the repartition.
-            salt = F.pmod(F.xxhash64("subj", "ord"), F.lit(config.salt_partitions))
-            wc = wc.repartition(F.col("component"), salt)
+        wc = salt_components(assign_components(triples, labels), config.salt_partitions)
         # materialize ONCE when it fits: merge_component fans with_comp
         # out to six tables and every consumer re-executes the triples ×
         # labels join when wc stays lazy. Measured round 5
@@ -142,9 +130,19 @@ def run_pipeline(
     tables = merge_component(with_comp, ref_cap=config.ref_cap)
     tables["triples"] = triples
     tables["components"] = labels
-    if config.collect_metrics:
-        tables["metrics"] = metrics
+    tables["metrics"] = metrics
     return tables
+
+
+def salt_components(with_comp: DataFrame, salt_partitions: int) -> DataFrame:
+    """Spread giant components over reducers before the merge groupBy
+    (no-op unless ``salt_partitions`` > 0). The final agg still combines
+    per (component, claim-key) because the groupBy keys are unchanged —
+    salting only drives the repartition."""
+    if salt_partitions <= 0:
+        return with_comp
+    salt = F.pmod(F.xxhash64("subj", "ord"), F.lit(salt_partitions))
+    return with_comp.repartition(F.col("component"), salt)
 
 
 def _join_strategies(df: DataFrame) -> dict[str, int] | None:

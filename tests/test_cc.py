@@ -51,70 +51,20 @@ def test_hot_node(spark):
     assert set(got.values()) == {"hub"}  # "hub" < "spoke..."
 
 
-def test_arrow_native_matches_pandas_fallback(spark):
-    """The round-3 Arrow-native driver union-find (toArrow +
-    dictionary_encode + rank-min) must label identically to the pandas
-    fallback path — including the lexicographic-min component contract on
-    multi-component graphs with shared prefixes and mixed key lengths."""
-    from auth2wd_spark.operators.cc import _driver_union_find, _driver_union_find_pandas
-
+def test_driver_path_matches_star_path(spark, monkeypatch):
+    """The Arrow-native driver union-find (toArrow + dictionary_encode +
+    rank-min) must label identically to the independent large/small-star
+    path — including the lexicographic-min component contract on
+    multi-component graphs with shared prefixes, mixed key lengths and
+    isolated two-node chains."""
     pairs = (
         [(f"rec{i}", f"P214:{i % 7}") for i in range(50)]
         + [("P214:0", "P227:x"), ("zz-last", "P227:x"), ("a", "rec3")]
-    )
-    edges = spark.createDataFrame(pairs, "src STRING, dst STRING")
-    arrow = {r["node"]: r["component"] for r in _driver_union_find(spark, edges).collect()}
-    pandas_ = {
-        r["node"]: r["component"]
-        for r in _driver_union_find_pandas(spark, edges).collect()
-    }
-    assert arrow == pandas_
-    assert arrow["zz-last"] == min(arrow)  # component of the big cluster is min member
-
-
-def test_hashed_driver_path_matches_exact(spark):
-    """The round-5 hashed driver path (int64 endpoint transfer +
-    distributed string relabel) must publish IDENTICAL (node, component)
-    labels to the exact-string path — same lexicographic-min contract —
-    on a graph with multiple components, shared prefixes, and singleton
-    chains."""
-    from auth2wd_spark.operators.cc import (
-        _driver_union_find,
-        _driver_union_find_hashed,
-    )
-
-    pairs = (
-        [(f"rec{i}", f"P214:{i % 7}") for i in range(60)]
-        + [("P214:0", "P227:x"), ("zz-last", "P227:x"), ("a", "rec3")]
         + [(f"iso{i}", f"iso{i + 1}") for i in range(0, 10, 2)]
     )
-    edges = spark.createDataFrame(pairs, "src STRING, dst STRING")
-    exact = {r["node"]: r["component"] for r in _driver_union_find(spark, edges).collect()}
-    hashed = {
-        r["node"]: r["component"]
-        for r in _driver_union_find_hashed(spark, edges).collect()
-    }
-    assert exact == hashed
-
-
-def test_hashed_gate_engages_above_byte_threshold(spark, monkeypatch):
-    """connected_components must route through the hashed path once the
-    key-byte volume crosses LOCAL_CC_HASHED_MIN_BYTES (and still return
-    correct labels)."""
-    from auth2wd_spark.operators import cc as cc_mod
-
-    monkeypatch.setattr(cc_mod, "LOCAL_CC_HASHED_MIN_BYTES", 1)
-    called = {}
-    orig = cc_mod._driver_union_find_hashed
-
-    def spy(spark_, edges):
-        called["hashed"] = True
-        return orig(spark_, edges)
-
-    monkeypatch.setattr(cc_mod, "_driver_union_find_hashed", spy)
-    edges = spark.createDataFrame(
-        [("a", "b"), ("b", "c"), ("x", "y")], "src STRING, dst STRING"
-    )
-    labels = {r["node"]: r["component"] for r in cc_mod.connected_components(edges).collect()}
-    assert called.get("hashed")
-    assert labels == {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x"}
+    edges = _edges(spark, pairs)
+    arrow = _collect(cc._driver_union_find(spark, edges))
+    monkeypatch.setattr(cc, "LOCAL_CC_THRESHOLD", 1)  # force the large/small-star path
+    star = _collect(cc.connected_components(edges))
+    assert arrow == star
+    assert arrow["zz-last"] == min(arrow)  # component of the big cluster is min member

@@ -225,7 +225,7 @@ def test_link_is_one_pass_over_raw(spark, tmp_path, label_retry):
         return spark.read.parquet(path)
 
     pages = spark.createDataFrame(corpus["pages"], schema=schemas.PAGES)
-    raw = parquet(extract_pages(pages, materialize=False), "raw")
+    raw = parquet(extract_pages(pages, lambda df: df), "raw")
     dims = [
         parquet(spark.createDataFrame(corpus[name], schema=schema), name)
         for name, schema in (

@@ -15,6 +15,7 @@ from auth2wd_spark.plans.manifests import (
     run_resumable,
     stage_is_complete,
 )
+from auth2wd_spark.plans.pipeline import PipelineConfig
 
 
 @pytest.fixture(scope="module")
@@ -104,3 +105,46 @@ def test_materialize_stage_reads_back_with_known_schema(spark, tmp_path):
     assert read_manifest(str(tmp_path / "stage"))["metrics"]["rows"] == 1000
     assert out.schema == spark.read.parquet(str(tmp_path / "stage")).schema
     assert out.count() == 1000
+
+
+def test_run_resumable_releases_route_cache(spark, corpus_frames, tmp_path):
+    """extract_pages persists the routed pages for its consumers; once
+    run_resumable returns, no cached Dataset may be left behind."""
+    spark.catalog.clearCache()
+    run_resumable(*corpus_frames, str(tmp_path / "out"))
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+ITEM_TABLES = ("claims", "labels", "aliases", "descriptions", "prop_text", "members")
+
+
+def test_run_resumable_applies_salt_partitions(spark, corpus_frames, tmp_path, monkeypatch):
+    """salt_partitions repartitions with_comp on (component, salt) before
+    it is checkpointed for the merge, and changes none of the six item
+    tables."""
+    checkpointed = []
+    frame_class = type(corpus_frames[0])  # the concrete (classic) DataFrame
+    local_checkpoint = frame_class.localCheckpoint
+
+    def spy(df, *args, **kwargs):
+        checkpointed.append(df._jdf.queryExecution().analyzed().toString())
+        return local_checkpoint(df, *args, **kwargs)
+
+    monkeypatch.setattr(frame_class, "localCheckpoint", spy)
+    tables, salted_plans = {}, {}
+    for salt in (0, 8):
+        checkpointed.clear()
+        out = run_resumable(
+            *corpus_frames, str(tmp_path / f"salt{salt}"), PipelineConfig(salt_partitions=salt)
+        )
+        tables[salt] = {name: sorted(map(repr, out[name].collect())) for name in ITEM_TABLES}
+        salted_plans[salt] = [
+            plan
+            for plan in checkpointed
+            if plan.startswith("RepartitionByExpression [component#")
+            and "pmod(xxhash64(subj#" in plan
+        ]
+    assert salted_plans[0] == []
+    assert len(salted_plans[8]) == 1 and "cast(8 as bigint))]" in salted_plans[8][0]
+    assert tables[8] == tables[0]
+    assert all(tables[0][name] for name in ("claims", "labels", "members"))
