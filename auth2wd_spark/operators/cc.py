@@ -24,6 +24,7 @@ import os
 
 from pyspark.sql import DataFrame, functions as F
 
+from .. import schemas
 from ..properties import P_VIAF, SUPPORTED_PROPERTIES
 
 EDGE_PROPERTIES = tuple(sorted(set(SUPPORTED_PROPERTIES) | {P_VIAF}))
@@ -99,7 +100,7 @@ def connected_components(edges: DataFrame, max_iter: int = 25) -> DataFrame:
     ).collect()[0]
     n_edges = stats["n"]
     if n_edges == 0:
-        return spark.createDataFrame([], "node STRING, component STRING")
+        return spark.createDataFrame([], schemas.COMPONENTS)
     # the driver path is gated by BYTES, not just edge count — 2M edges of
     # long URI keys is driver-OOM territory even when the count looks safe.
     # It consumes the DIRECTED edges as-is: the vectorized min-label sweep

@@ -53,6 +53,14 @@ RAW = T.StructType(
 # linked triples (candidates resolved; kinds claim|prop_text|label|alias|description)
 TRIPLES = RAW  # same physical schema; candidates eliminated
 
+# connected components: one row per clustered node, component = min node
+COMPONENTS = T.StructType(
+    [
+        T.StructField("node", T.StringType(), True),
+        T.StructField("component", T.StringType(), True),
+    ]
+)
+
 # dimension tables (FIXTURES.md §2)
 ID_TO_QID = T.StructType(
     [

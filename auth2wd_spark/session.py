@@ -84,23 +84,23 @@ def default_driver_memory() -> str:
     return f"{int(ram * 0.6) // 2**20}m"
 
 
+def default_cpus() -> int:
+    """Local-mode cores: ``SPARK_GRAFT_CPUS`` when set, else the CPUs this
+    process may run on (a fixed core count sized for a large host
+    oversubscribes a small one)."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(env) if env else len(os.sched_getaffinity(0))
+
+
 def build_session(
     app_name: str = "auth2wd-spark",
     cpus: int | str | None = None,
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
-    cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS", "32")
-    local_dir = os.environ.get("SPARK_LOCAL_DIRS")
-    if local_dir is None and os.path.isdir("/dev/shm"):
-        # RAM-backed shuffle/spill: local-mode shuffles go through
-        # spark.local.dir; on shared hosts disk latency noise dominates
-        # small-stage timing otherwise
-        local_dir = "/dev/shm/spark-local"
-        os.makedirs(local_dir, exist_ok=True)
+    cpus = cpus or default_cpus()
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.local.dir", local_dir or "/tmp")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or max(int(cpus) * 2, 8)))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -111,6 +111,8 @@ def build_session(
         .config("spark.ui.retainedStages", "10000")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory())
     )
+    # shuffle and spill files: Spark itself puts them in SPARK_LOCAL_DIRS
+    # when set, else in its default temp dir (spark.local.dir)
     spark = builder.getOrCreate()
     ship_package(spark)
     return spark

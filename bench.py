@@ -48,8 +48,10 @@ import time
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
+from auth2wd_spark.session import default_cpus  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = default_cpus()
 BENCH_REPS = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "2"))
 
 

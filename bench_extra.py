@@ -12,7 +12,8 @@ Modes:
   python bench_extra.py pipeline             one pipeline rep with phase metrics.
 
 Environment: $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-$SPARK_GRAFT_CPUS (default 32) — same contract as bench.py.
+$SPARK_GRAFT_CPUS (default: the CPUs this process may use) — same
+contract as bench.py.
 """
 
 from __future__ import annotations
@@ -25,8 +26,10 @@ import time
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
+from auth2wd_spark.session import default_cpus  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = default_cpus()
 XREPS = int(os.environ.get("SPARK_GRAFT_XREPS", "3"))
 
 
